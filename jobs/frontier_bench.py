@@ -4,7 +4,7 @@ Builds a deterministic frontier of N candidate URLs with ``spark.range``
 (no I/O, so the measurement isolates engine work), then runs the full
 admission hot path exactly as a crawl round does (plans/crawl.py):
 
-    canonicalize (Arrow pandas UDF) → md5/host/path derivation →
+    canonicalize (Arrow pandas UDF) → sha1/host/path derivation →
     scheme/whitelist/depth filters → in-round dedup (min-struct agg) →
     anti-join vs a seen set of N/4 hashes → per-host politeness ranking →
     budget split
@@ -67,18 +67,18 @@ def synth_candidates(spark: SparkSession, n: int, partitions: int) -> DataFrame:
 
 
 def synth_seen(spark: SparkSession, n: int, partitions: int) -> DataFrame:
-    """Seen set: the md5 of every 4th clean URL (hash-only table, like the
-    real seen store)."""
+    """Seen set: about every 4th candidate, keyed as admission keys it —
+    ``url_sha1`` of the canonical URL (hash-only table, like the real seen
+    store)."""
     cand = synth_candidates(spark, n, partitions)
-    return cand.filter(F.crc32(F.col("url")) % 4 == 0).select(
-        F.md5(F.col("url")).alias("url_sha1")
-    ).distinct()
+    return admission.canonicalize_candidates(
+        cand.filter(F.crc32(F.col("url")) % 4 == 0)
+    ).select("url_sha1").distinct()
 
 
 def run_frontier_workload(
     spark: SparkSession, n: int = 1_000_000, partitions: int | None = None,
     max_depth: int = 4, budget: int = 50, workdir: str | None = None,
-    dedup_winner: str = "packed_string",
 ) -> dict:
     """One full admission+politeness round over N synthetic frontier URLs.
 
@@ -125,7 +125,6 @@ def run_frontier_workload(
         scratch: list = []
         admitted = admission.admit(
             cand, seen, WHITELIST, max_depth=max_depth, scratch=scratch,
-            dedup_winner=dedup_winner,
         )
         r = ranked(admitted).join(
             F.broadcast(budgets.select(F.col("host").alias("_b_host"),

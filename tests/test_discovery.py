@@ -208,3 +208,31 @@ def test_depth_limit_applies_to_sitemap_chain(spark, tmp_path):
     assert f"http://{HOT_HOST}/qy/prod/v/1-1" in {
         r["url"] for r in result.seen(spark).collect()
     }
+
+
+def test_robots_from_pages_keeps_one_body_per_host(spark):
+    """A host served at both http:// and https:// has two robots.txt rows
+    that may disagree. parse_robots orders a host's lines by their
+    position within the body, so two bodies would interleave; the https
+    body wins, whatever order the rows arrive in."""
+    from webcrawler_spark.plans.crawl import robots_bodies_from_pages
+    from webcrawler_spark.sources.robots import crawl_delays, parse_robots
+
+    https_body = "User-agent: *\nCrawl-delay: 10\nDisallow: /a/\n"
+    rows = [
+        (f"http://{HOT_HOST}/robots.txt",
+         bytearray(b"User-agent: *\nCrawl-delay: 1\nDisallow: /b/\n")),
+        (f"https://{HOT_HOST}/robots.txt", bytearray(https_body.encode())),
+        ("http://other.example.com/robots.txt",
+         bytearray(b"User-agent: *\nDisallow: /c/\n")),
+    ]
+    for order in (rows, rows[::-1]):
+        pages = spark.createDataFrame(order, "url string, html binary").repartition(3)
+        bodies = robots_bodies_from_pages(pages)
+        got = sorted((r["host"], r["body"]) for r in bodies.collect())
+        assert got == [("other.example.com", "User-agent: *\nDisallow: /c/\n"),
+                       (HOT_HOST, https_body)]
+        rules = {r["host"]: r["disallow_prefixes"] for r in parse_robots(bodies).collect()}
+        assert rules[HOT_HOST] == ["/a/"]
+        delays = {r["host"]: r["crawl_delay"] for r in crawl_delays(bodies).collect()}
+        assert delays[HOT_HOST] == 10

@@ -100,51 +100,21 @@ def test_resume_on_done_store_is_noop(spark, fixture_web, tmp_path):
     assert _collect_state(spark, first) == _collect_state(spark, again)
 
 
-def test_resume_legacy_checkpoint_without_priority_column(spark, fixture_web, tmp_path):
-    """A checkpoint written before the r5 `priority` column must resume:
-    the loop backfills priority=0 (every legacy row ranked equal, so
-    order is preserved) on candidates/deferred/retry. Simulated by
-    rewriting round-k's committed datasets without the column."""
-    from pyspark.sql import functions as F
+def test_resume_store_without_seen_table_fails_loudly(spark, fixture_web, tmp_path):
+    """A store with committed rounds but no seen table in its
+    _store_meta.json (written before the seen table existed) must not
+    resume: a fresh table would read EMPTY and re-admit every crawled URL."""
+    import os
+
+    import pytest
 
     paths = fixture_web["paths"]
     pages_df = spark.read.parquet(paths["pages"])
     seeds_df = spark.read.parquet(paths["seeds"])
-    cfg = CrawlConfig(whitelist=WHITELIST, max_depth=2, max_rounds=8,
-                      parsers="combined")
-
-    full_dir = str(tmp_path / "full_lp")
-    full = run_crawl(spark, pages_df, seeds_df, cfg, checkpoint_dir=full_dir)
-    want = _collect_state(spark, full)
-
-    import json
-    import os
-
-    part_dir = str(tmp_path / "part_lp")
-    run_crawl(spark, pages_df, seeds_df, cfg, checkpoint_dir=part_dir)
-    store = RoundStore(part_dir)
-    k = 1
-    for rnd in store.committed_rounds():
-        if rnd > k:
-            os.remove(os.path.join(store.manifest_dir, f"round_{rnd}.json"))
-            shutil.rmtree(os.path.join(store.rounds_dir, f"r={rnd}"),
-                          ignore_errors=True)
-    m = store.manifest(k)
-    if m.get("done"):
-        m["done"] = False
-        with open(os.path.join(store.manifest_dir, f"round_{k}.json"), "w") as f:
-            json.dump(m, f)
-    # strip the priority column from the datasets resume reads (legacy shape)
-    for name in ("next_candidates", "deferred", "retry"):
-        p = store.round_path(k, name)
-        if not os.path.exists(p):
-            continue
-        df = spark.read.parquet(p)
-        assert "priority" in df.columns
-        df = df.drop("priority").localCheckpoint()
-        shutil.rmtree(p)
-        df.write.parquet(p)
-
-    resumed = run_crawl(spark, pages_df, seeds_df, cfg,
-                        checkpoint_dir=part_dir, resume=True)
-    assert _collect_state(spark, resumed) == want
+    cfg = CrawlConfig(whitelist=WHITELIST, max_depth=1, max_rounds=4,
+                      parsers="bm1365")
+    d = str(tmp_path / "no_seen_table")
+    run_crawl(spark, pages_df, seeds_df, cfg, checkpoint_dir=d)
+    os.remove(RoundStore(d)._meta_path())
+    with pytest.raises(ValueError, match="no seen table"):
+        run_crawl(spark, pages_df, seeds_df, cfg, checkpoint_dir=d, resume=True)

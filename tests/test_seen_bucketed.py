@@ -142,7 +142,7 @@ def test_compaction_bounds_files_preserves_plan_and_data(spark, store):
 
 def test_crawl_with_aggressive_compaction_matches(spark, fixture_web, tmp_path):
     """Compacting after (almost) every round must not change crawl
-    semantics: identical order + seen set vs the parquet backend, and the
+    semantics: identical order + seen set vs an uncompacted run, and the
     store ends compacted."""
     from webcrawler_spark.fixtures import WHITELIST
     from webcrawler_spark.plans.crawl import CrawlConfig, run_crawl
@@ -151,22 +151,23 @@ def test_crawl_with_aggressive_compaction_matches(spark, fixture_web, tmp_path):
     pages = spark.read.parquet(paths["pages"])
     seeds = spark.read.parquet(paths["seeds"])
 
-    def run(backend: str, compact):
+    def run(compact):
         cfg = CrawlConfig(
             whitelist=WHITELIST, max_depth=2, max_rounds=5,
-            seen_backend=backend, seen_compact_files_per_bucket=compact,
+            seen_compact_files_per_bucket=compact,
         )
         res = run_crawl(
             spark, pages, seeds, cfg,
-            checkpoint_dir=str(tmp_path / f"ckpt_{backend}_{compact}"),
+            checkpoint_dir=str(tmp_path / f"ckpt_{compact}"),
         )
         order = sorted((r["round"], r["url"]) for r in res.order(spark).collect())
         seen = sorted(r["url_sha1"] for r in res.seen(spark).collect())
         return order, seen, res
 
-    o1, s1, res = run("bucketed", 1)
-    o2, s2, _ = run("parquet", None)
+    o1, s1, res = run(1)
+    o2, s2, uncompacted = run(None)
     assert (o1, s1) == (o2, s2)
+    assert uncompacted.store.seen_files_per_bucket() > 2
     assert res.store.seen_files_per_bucket() <= 2  # compacted near the end
 
 
@@ -203,32 +204,6 @@ def test_seen_table_provider_seam(spark, tmp_path, provider):
         assert json.load(f)["seen_provider"] == provider
 
 
-def test_crawl_bucketed_matches_parquet_backend(spark, fixture_web, tmp_path):
-    """Same crawl, both seen backends: identical order and seen set."""
-    from webcrawler_spark.fixtures import WHITELIST
-    from webcrawler_spark.plans.crawl import CrawlConfig, run_crawl
-
-    paths = fixture_web["paths"]
-    pages = spark.read.parquet(paths["pages"])
-    seeds = spark.read.parquet(paths["seeds"])
-
-    def run(backend: str):
-        cfg = CrawlConfig(
-            whitelist=WHITELIST, max_depth=2, max_rounds=5, seen_backend=backend
-        )
-        res = run_crawl(
-            spark, pages, seeds, cfg,
-            checkpoint_dir=str(tmp_path / f"ckpt_{backend}"),
-        )
-        order = sorted(
-            (r["round"], r["url"]) for r in res.order(spark).collect()
-        )
-        seen = sorted(r["url_sha1"] for r in res.seen(spark).collect())
-        return order, seen
-
-    assert run("bucketed") == run("parquet")
-
-
 def test_ensure_seen_table_repairs_stale_catalog_location(spark, store):
     """ADVICE fix (crash window with a persistent metastore): a compaction
     that advanced the location pointer in _store_meta.json but died before
@@ -239,7 +214,6 @@ def test_ensure_seen_table_repairs_stale_catalog_location(spark, store):
     pointer."""
     import shutil
 
-    store.pin_backend("bucketed")
     store.ensure_seen_table(spark, 4)
     store.append_seen_bucketed(_keys(spark, 0, 20), 0)
     assert store.read_seen_bucketed(spark, upto=0).count() == 20

@@ -32,8 +32,14 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+FPP = 0.01      # target false-positive rate
+HEADROOM = 4.0  # BloomTable over-sizing factor, so per-round maintenance
+# is an OR-merge of the seen DELTA only; the full build re-runs only when
+# n_seen outgrows the sized capacity — geometric steps, so amortized O(1)
+# work per key over the crawl life
 
 
 class ShardedBloom:
@@ -99,7 +105,7 @@ class ShardedBloom:
     MAX_SHARD_BYTES = 16 << 20  # broadcast-friendly per-shard bitmap cap
 
     @classmethod
-    def plan(cls, n_seen: int, fpp: float = 0.01,
+    def plan(cls, n_seen: int, fpp: float = FPP,
              max_shard_bytes: int | None = None) -> tuple[int, int]:
         """Size the filter for n_seen keys: -> (shard_bits, expected_per_shard).
 
@@ -119,7 +125,7 @@ class ShardedBloom:
 
     @classmethod
     def build(cls, seen: DataFrame, key_col: str = "url_sha1",
-              expected_per_shard: int | None = None, fpp: float = 0.01,
+              expected_per_shard: int | None = None, fpp: float = FPP,
               shard_bits: int | None = None,
               n_seen: int | None = None, as_table: bool = False,
               headroom: float = 1.0):
@@ -285,10 +291,10 @@ class BloomTable:
 
     @classmethod
     def build(cls, seen: DataFrame, key_col: str = "url_sha1",
-              expected_per_shard: int | None = None, fpp: float = 0.01,
+              expected_per_shard: int | None = None, fpp: float = FPP,
               shard_bits: int | None = None,
               n_seen: int | None = None,
-              headroom: float = 1.0) -> "BloomTable":
+              headroom: float = HEADROOM) -> "BloomTable":
         sb, m, k, per_shard, bitmaps = ShardedBloom.build(
             seen, key_col=key_col, expected_per_shard=expected_per_shard,
             fpp=fpp, shard_bits=shard_bits, n_seen=n_seen, as_table=True,
@@ -396,35 +402,3 @@ class BloomTable:
         maybe = tagged.filter(F.col("_maybe_seen")).drop("_maybe_seen")
         new = tagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
         return maybe, new
-
-
-def bloom_split(spark: SparkSession, bloom: ShardedBloom):
-    """Returns a callable df -> (maybe_seen, definitely_new) using a
-    broadcast of the bloom's shard bitmaps and an Arrow-vectorized probe.
-
-    SMALL-FILTER path only (total bitmap bytes must fit a broadcast
-    comfortably); the crawl uses BloomTable.split, which never ships more
-    than one shard to a task."""
-    bc = spark.sparkContext.broadcast(
-        {"shard_bits": bloom.shard_bits, "m": bloom.m, "k": bloom.k,
-         "shards": {sid: bm.tobytes() for sid, bm in bloom.shards.items()}}
-    )
-
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("boolean")
-    def might_contain_udf(sha1_hex: pd.Series) -> pd.Series:
-        st = bc.value
-        bl = ShardedBloom(
-            st["shard_bits"], st["m"], st["k"],
-            {sid: np.frombuffer(b, dtype=np.uint8) for sid, b in st["shards"].items()},
-        )
-        return pd.Series(bl.might_contain(sha1_hex))
-
-    def split(df: DataFrame) -> tuple[DataFrame, DataFrame]:
-        tagged = df.withColumn("_maybe_seen", might_contain_udf(F.col("url_sha1")))
-        maybe = tagged.filter(F.col("_maybe_seen")).drop("_maybe_seen")
-        new = tagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
-        return maybe, new
-
-    return split

@@ -69,7 +69,7 @@ RAW_CANDIDATE_SCHEMA = T.StructType(
 # discovering a 50k-URL sitemap beats fetching any single page
 SITEMAP_PRIORITY = 2 * 100  # 2 x sitemap.PRIORITY_SCALE (> any <priority>)
 # link_pos for sitemap-discovered candidates: a distinct space above any
-# in-page link position (bounded < 2^30 for the numeric dedup variant)
+# in-page link position
 SITEMAP_LINK_POS = 1 << 29
 
 # queue rows = candidate columns + fetch-attempt counter (retry support)
@@ -97,13 +97,6 @@ class CrawlConfig:
     use_bloom: bool = True
     bloom_min_seen: int = 100_000        # below this the exact anti-join is
                                          # cheaper than building a bloom
-    bloom_fpp: float = 0.01
-    bloom_shard_bits: int | None = None  # None = auto-size from n_seen
-                                         # (each shard bitmap <= 16 MB)
-    bloom_headroom: float = 4.0          # over-size the bloom by this factor
-    # so per-round maintenance is an OR-merge of the seen DELTA only; the
-    # full build re-runs only when n_seen outgrows the sized capacity —
-    # geometric steps, so amortized O(1) work per key over the crawl life
     politeness_salt_buckets: int | str | None = "auto"  # int = fixed salt,
     # None = plain per-host window, "auto" = salt with defaultParallelism
     # buckets whenever the PREVIOUS round's committed queue (order ∪
@@ -115,13 +108,10 @@ class CrawlConfig:
     # already small (measured 2x slower on a 2k-page fixture crawl).
     hot_host_share: float = 0.05
     hot_host_min_rows: int = 100_000
-    seen_backend: str = "bucketed"       # "bucketed": the anti-join reads a
-    # CLUSTERED BY (url_sha1) datasource table whose HashPartitioning
-    # reaches the join — no full-seen exchange per round (the Iceberg
-    # bucket-transform layout on plain parquet). "parquet": per-round delta
-    # union (re-shuffles the seen side every round; small crawls only).
-    seen_buckets: int | None = None      # bucket count, pinned at store
-    # creation (None = defaultParallelism); pick ~fleet-cores at 10^10
+    seen_buckets: int | None = None      # bucket count of the seen table
+    # (CLUSTERED BY url_sha1, so the anti-join reads it without a seen-side
+    # exchange), pinned at store creation (None = defaultParallelism); pick
+    # ~fleet-cores at 10^10
     seen_compact_files_per_bucket: int | None = 16  # compact the bucketed
     # seen table (one-file-per-bucket rewrite, committed rounds only) when
     # the per-round inserts have stacked more than this many files per
@@ -142,11 +132,6 @@ class CrawlConfig:
     # with robots_bodies, hosts declaring `Crawl-delay: d` default to
     # budget_per_round = max(1, floor(round_seconds / d)) unless the caller's
     # explicit budgets table already names the host (explicit wins)
-    seen_partitions: int | None = None   # repartition seen deltas by url_sha1
-    parse_partitions: int | str | None = "auto"  # widen the parse stage:
-    # AQE coalesces the fetch-join output by BYTES, but HTML parsing is
-    # per-ROW cpu — small pages would leave most cores idle. "auto" =
-    # defaultParallelism, int = exact, None = trust AQE (large-blob case)
 
 
 @dataclass
@@ -197,9 +182,12 @@ def robots_bodies_from_pages(pages: DataFrame) -> DataFrame:
     The filter is an exact path match (url == scheme://host + "/robots.txt"
     — RFC 9309 §2.3: the file lives ONLY at the path-root), expressed as
     byte scans (endswith + a length check against the host window) so the
-    scan stays a pushdown-friendly codegen'd projection. Bodies decode as
-    UTF-8 with replacement (undecodable bytes become U+FFFD line noise the
-    field parser ignores — never a task failure)."""
+    scan stays a pushdown-friendly codegen'd projection. A host keeps ONE
+    body — https over http, then the smallest url — because parse_robots
+    orders a host's lines by their position within the body, so two bodies
+    would interleave. Bodies decode as UTF-8 with replacement (undecodable
+    bytes become U+FFFD line noise the field parser ignores — never a task
+    failure)."""
     url = F.col("url")
     rest = U.url_rest_canonical(url)  # host[/path...]
     is_robots = url.endswith("/robots.txt") & (
@@ -210,10 +198,9 @@ def robots_bodies_from_pages(pages: DataFrame) -> DataFrame:
     return (
         pages.select("url", "html")
         .filter(is_robots)
-        .select(
-            U.url_host_canonical(url).alias("host"),
-            F.decode(F.col("html"), "UTF-8").alias("body"),
-        )
+        .groupBy(U.url_host_canonical(url).alias("host"))
+        .agg(F.min_by("html", F.struct(~url.startswith("https://"), url)).alias("html"))
+        .select("host", F.decode(F.col("html"), "UTF-8").alias("body"))
     )
 
 
@@ -290,16 +277,9 @@ def run_crawl(
     discovery chain, closed inside the round DAG."""
     store = RoundStore(checkpoint_dir)
     result = CrawlResult(store=store)
-    bucketed = cfg.seen_backend == "bucketed"
-    # backend is pinned per store: resuming a parquet-backend checkpoint
-    # under 'bucketed' (or vice versa) fails loudly instead of silently
-    # reading an empty seen table; legacy stores without a pin are safe
-    # because the bucketed resume path backfills below
-    store.pin_backend(cfg.seen_backend)
-    if bucketed:
-        store.ensure_seen_table(
-            spark, cfg.seen_buckets or spark.sparkContext.defaultParallelism
-        )
+    store.ensure_seen_table(
+        spark, cfg.seen_buckets or spark.sparkContext.defaultParallelism
+    )
 
     if robots_bodies is None and cfg.robots_from_pages:
         # one column-pruned scan; bounded (one row per host) so the
@@ -335,48 +315,17 @@ def run_crawl(
             result.rounds = last + 1
             result.metrics = [store.manifest(r)["stats"] for r in store.committed_rounds()]
             return result
-        import os as _os
-
         candidates = store.read(spark, last, "next_candidates")
         deferred = store.read(spark, last, "deferred")
-        if "attempts" not in deferred.columns:
-            # checkpoint written before retry support: deferred rows never
-            # failed a fetch, so attempts starts at 0
-            deferred = deferred.withColumn("attempts", F.lit(0).cast("long"))
-        retry = (
-            store.read(spark, last, "retry")
-            if _os.path.exists(store.round_path(last, "retry"))
-            else _empty(spark, QUEUE_SCHEMA)
-        )
-        # checkpoint written before the priority column (legacy): every row
-        # ranked equal then, so 0 (the plain-link default) preserves order
-        if "priority" not in candidates.columns:
-            candidates = candidates.withColumn("priority", F.lit(0).cast("long"))
-        if "priority" not in deferred.columns:
-            deferred = deferred.withColumn("priority", F.lit(0).cast("long"))
-        if "priority" not in retry.columns:
-            retry = retry.withColumn("priority", F.lit(0).cast("long"))
-        if bucketed:
-            # legacy / cross-backend checkpoints: the table may be missing
-            # committed rounds' keys — refill from seen_delta parquet first
-            store.backfill_seen_bucketed(spark, upto=last)
-        seen = (
-            store.read_seen_bucketed(spark, upto=last)
-            if bucketed
-            else store.read_all(spark, "seen_delta", upto=last)
-        )
+        retry = store.read(spark, last, "retry")
+        seen = store.read_seen_bucketed(spark, upto=last)
         rnd = last + 1
         result.metrics = [store.manifest(r)["stats"] for r in store.committed_rounds()]
         # driver-side running counts from the committed manifests — no
         # re-count jobs on resume
-        last_counts = store.manifest(last).get("counts", {})
-        n_candidates = (
-            last_counts["next_candidates"]
-            if "next_candidates" in last_counts
-            else candidates.count()
-        )
+        n_candidates = store.manifest(last)["counts"]["next_candidates"]
         n_seen_total = sum(
-            store.manifest(r).get("counts", {}).get("seen_delta", 0)
+            store.manifest(r)["counts"]["seen_delta"]
             for r in store.committed_rounds()
         )
     else:
@@ -439,11 +388,7 @@ def run_crawl(
                 # bitmaps stay a persisted (shard, bitmap) DataFrame; the
                 # probe cogroups candidates with it so each task holds ONE
                 # <=16 MB shard — no whole-filter broadcast at 10^10 keys
-                bloom_table = BloomTable.build(
-                    seen, n_seen=n_seen_total,
-                    fpp=cfg.bloom_fpp, shard_bits=cfg.bloom_shard_bits,
-                    headroom=cfg.bloom_headroom,
-                )
+                bloom_table = BloomTable.build(seen, n_seen=n_seen_total)
             prefilter = (
                 lambda d, _bt=bloom_table: _bt.split(d, scratch=scratch)
             )
@@ -451,8 +396,6 @@ def run_crawl(
             candidates, seen_df, cfg.whitelist, cfg.max_depth,
             robots=robots, bloom_prefilter=prefilter, scratch=scratch,
         )
-        if cfg.seen_partitions:
-            admitted = admitted.repartition(cfg.seen_partitions, "url_sha1")
         admitted = admitted.persist(StorageLevel.MEMORY_AND_DISK)
 
         # crawl-trap guard: overflow beyond the per-host cap is marked SEEN
@@ -527,12 +470,10 @@ def run_crawl(
             (F.col("status") == 200) & F.col("content_type").startswith("text/html")
         ).select("url", "host", "depth", "html")
 
-        if cfg.parse_partitions == "auto":
-            html_pages = html_pages.repartition(
-                spark.sparkContext.defaultParallelism
-            )
-        elif isinstance(cfg.parse_partitions, int):
-            html_pages = html_pages.repartition(cfg.parse_partitions)
+        # widen the parse stage: AQE coalesces the fetch-join output by
+        # BYTES, but HTML parsing is per-ROW cpu — small pages would leave
+        # most cores idle
+        html_pages = html_pages.repartition(spark.sparkContext.defaultParallelism)
 
         parsed_all = html_pages.withColumn(
             "p", parse_html_udf(F.col("html"), F.col("url"))
@@ -646,17 +587,12 @@ def run_crawl(
             "errors": 0,
             "deferred": 0,
         }
-        extra_writes = []
-        if bucketed:
-            # committed with the round (before the manifest rename): a
-            # manifest implies the keys are in the table; orphans from a
-            # crashed attempt carry this round number and stay invisible
-            # until the round actually commits (reads filter round <= K)
-            extra_writes.append(
-                lambda: store.append_seen_bucketed(
-                    admitted.select("url_sha1"), rnd
-                )
-            )
+        # fill the round's persisted frames on this thread, in dependency
+        # order (parsed_all reads fetched, which reads fetch_now, which
+        # reads admitted): the commit's writer threads then only read built
+        # caches. Left to the writers, concurrent first builds of these
+        # shared-lineage caches can deadlock on CachedRDDBuilder monitors.
+        parsed_all.count()
         manifest = store.commit_round(
             rnd,
             {
@@ -670,7 +606,6 @@ def run_crawl(
                 "retry": retry_next,
             },
             stats=stats,
-            extra_writes=extra_writes,
         )
 
         # post-commit stats: observe() metrics captured during the writes
@@ -711,16 +646,11 @@ def run_crawl(
 
         candidates = store.read(spark, rnd, "next_candidates")
         if (
-            bucketed
-            and cfg.seen_compact_files_per_bucket
+            cfg.seen_compact_files_per_bucket
             and store.seen_files_per_bucket() > cfg.seen_compact_files_per_bucket
         ):
             store.compact_seen_bucketed(spark, upto=rnd)
-        seen = (
-            store.read_seen_bucketed(spark, upto=rnd)
-            if bucketed
-            else store.read_all(spark, "seen_delta", upto=rnd)
-        )
+        seen = store.read_seen_bucketed(spark, upto=rnd)
 
         # incremental bloom maintenance: fold ONLY this round's committed
         # delta into the persisted bitmaps (cost ~ |delta| + filter size),
@@ -730,7 +660,7 @@ def run_crawl(
                 store.read(spark, rnd, "seen_delta").select("url_sha1")
             )
 
-        for df in scratch:  # safe: admitted materialized during commit
+        for df in scratch:  # safe: admitted was built before the commit
             df.unpersist()
         admitted.unpersist()
         fetch_now.unpersist()

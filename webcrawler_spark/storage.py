@@ -44,9 +44,16 @@ class RoundStore:
 
     # -- commit ------------------------------------------------------------
     def commit_round(self, rnd: int, datasets: dict[str, DataFrame],
-                     stats: dict | None = None, done: bool = False,
-                     extra_writes: list | None = None) -> dict:
+                     stats: dict | None = None, done: bool = False) -> dict:
         """Write all datasets of a round, then the manifest (atomic rename).
+        The writes run concurrently, so build any persisted frame they
+        share before calling.
+
+        A ``seen_delta`` dataset's keys also go into the seen table, after
+        the dataset writes and before the manifest rename: a committed
+        manifest implies the keys are in the table, and the keys of a
+        crashed attempt carry its round number, so reads (round <= last
+        committed) never see them.
 
         Returns the manifest dict, including per-dataset row counts under
         "counts" — collected with ``observe()`` DURING each write job, so
@@ -77,15 +84,14 @@ class RoundStore:
                 "overwrite"
             ).parquet(path)
 
-        n_jobs = len(datasets) + len(extra_writes or [])
-        with ThreadPoolExecutor(max_workers=min(8, n_jobs)) as pool:
-            futures = [pool.submit(write_one, item) for item in datasets.items()]
-            # extra_writes: zero-arg callables committed with the round (e.g.
-            # the bucketed-seen insert) — they run before the manifest rename,
-            # so a committed manifest implies they completed
-            futures += [pool.submit(fn) for fn in (extra_writes or [])]
-            for fut in futures:
+        with ThreadPoolExecutor(max_workers=min(8, len(datasets))) as pool:
+            for fut in [pool.submit(write_one, item) for item in datasets.items()]:
                 fut.result()
+        # on this thread, after the pool: the insert re-caches every cached
+        # plan that reads the seen table (InsertIntoHadoopFsRelationCommand
+        # -> recacheByPath), which must not race the writers' cache reads
+        if "seen_delta" in datasets:
+            self.append_seen_bucketed(datasets["seen_delta"].select("url_sha1"), rnd)
         counts = {name: int(obs.get["rows"]) for name, obs in observations.items()}
         manifest = {
             "round": rnd,
@@ -218,29 +224,6 @@ class RoundStore:
             json.dump(meta, f)
         os.replace(tmp, self._meta_path())
 
-    def pin_backend(self, backend: str) -> None:
-        """Pin the seen backend on first use; fail loudly on a mismatch.
-
-        A checkpoint written with seen_backend='parquet' holds its seen set
-        only in per-round seen_delta parquet; resuming it under 'bucketed'
-        would read a freshly created EMPTY table and silently re-admit every
-        previously crawled URL. A store with no pin (legacy, pre-round-4) is
-        pinned to the resuming run's backend — safe, because the bucketed
-        resume path backfills the table from the committed seen_delta
-        parquet (backfill_seen_bucketed) before its first read."""
-        meta = self._read_meta()
-        pinned = meta.get("seen_backend")
-        if pinned is None:
-            meta["seen_backend"] = backend
-            self._write_meta(meta)
-        elif pinned != backend:
-            raise ValueError(
-                f"checkpoint at {self.root} was written with "
-                f"seen_backend={pinned!r}; resuming with {backend!r} would "
-                f"lose the seen set. Pass seen_backend={pinned!r} (or start "
-                "a fresh checkpoint_dir)."
-            )
-
     def seen_table_ddl(self, n_buckets: int, provider: str = "parquet",
                        table: str | None = None,
                        location: str | None = None) -> str:
@@ -278,6 +261,13 @@ class RoundStore:
         if "seen_buckets" in meta:
             n_buckets = int(meta["seen_buckets"])
             provider = meta.get("seen_provider", provider)
+        elif self.committed_rounds():
+            # a store written without a seen table: creating one now would
+            # read EMPTY and silently re-admit every crawled URL
+            raise ValueError(
+                f"checkpoint at {self.root} has committed rounds but no seen "
+                "table; start a fresh checkpoint_dir"
+            )
         else:
             meta["seen_buckets"] = int(n_buckets)
             meta["seen_provider"] = provider
@@ -396,36 +386,6 @@ class RoundStore:
         spark.sql(self.seen_table_ddl(n, provider, location=new_loc))
         shutil.rmtree(self._seen_location(v), ignore_errors=True)
         return new_loc
-
-    def backfill_seen_bucketed(self, spark: SparkSession, upto: int) -> list[int]:
-        """Re-insert any committed round's seen keys missing from the
-        bucketed table, from the seen_delta parquet (written every round
-        regardless of backend). Covers resuming a legacy checkpoint created
-        before the bucketed backend existed — or under seen_backend=
-        'parquet' — where ensure_seen_table just created an EMPTY table:
-        without the backfill the resume would silently lose the entire seen
-        set and re-admit every crawled URL. Idempotent: a committed round's
-        insert completed before its manifest (commit protocol), so presence
-        of ANY row for a round implies all of them. One distinct-scan of the
-        table's long `round` column per resume; returns backfilled rounds."""
-        committed = [
-            r for r in self.committed_rounds()
-            if r <= upto
-            and self.manifest(r).get("counts", {}).get("seen_delta", 1) != 0
-            and os.path.exists(self.round_path(r, "seen_delta"))
-        ]
-        if not committed:
-            return []
-        present = {
-            int(row["round"])
-            for row in spark.table(self.seen_table).select("round").distinct().collect()
-        }
-        missing = [r for r in committed if r not in present]
-        for r in missing:
-            self.append_seen_bucketed(
-                self.read(spark, r, "seen_delta").select("url_sha1"), r
-            )
-        return missing
 
     def append_seen_bucketed(self, keys: DataFrame, rnd: int) -> None:
         """Insert one round's url_sha1 keys. The pre-repartition on the
